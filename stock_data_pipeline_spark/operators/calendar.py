@@ -38,8 +38,10 @@ def market_day_filter(
     """X9 — keep only rows whose date is a market day, via a broadcast
     left-semi join against the calendar dimension (reference gates the
     whole run on ``get_market_day`` — functions.py:61-66, main.py:89-94).
+    A semi join ignores duplicate calendar dates, so the dimension is not
+    deduplicated first: a ``distinct`` would add a shuffle job.
     """
-    cal = market_days.select(F.col(market_days.columns[0]).alias(date_col)).distinct()
+    cal = market_days.select(F.col(market_days.columns[0]).alias(date_col))
     return df.join(F.broadcast(cal), on=date_col, how="left_semi")
 
 

@@ -10,11 +10,18 @@ compositions over a parquet state store:
     gate      market_day_filter          (X9 — broadcast calendar dim)
     ingest    append_incremental         (F1/G1 — idempotent delta load)
     compute   calculate_sector_price     (J1 — join/agg/broadcast)
-    refresh   coalesce_merge             (F5 — fill only NULLs)
+    refresh   full outer join + coalesce (F5 — fill only NULLs)
     export    pivot_wide + write_csv     (B3/B6 — presentation edge)
 
+The refresh is one full outer join of the history state and the fresh
+computation on (date, sector), so the prices ⋈ holdings aggregate runs
+once per history write. The export is built on first access to
+``DailyRunResult.wide_export``: its per-sector pivot has no values list,
+so building it runs a Spark job, which a caller that only persists
+``prices`` and ``sector_history`` never pays.
+
 Everything is idempotent: re-running a day is a no-op (the incremental
-append drops overlaps; the merge only fills NULLs), which is what turns
+append drops overlaps; the refresh only fills NULLs), which is what turns
 the reference's fragile drop-and-recreate reset phase (main.py:113-121)
 into a retry-safe batch job.
 """
@@ -22,22 +29,47 @@ into a retry-safe batch job.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import cached_property
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from stock_data_pipeline_spark.operators.calendar import market_day_filter
 from stock_data_pipeline_spark.operators.incremental import append_incremental
-from stock_data_pipeline_spark.operators.merge import coalesce_merge
 from stock_data_pipeline_spark.operators.pivoting import pivot_wide
 from stock_data_pipeline_spark.pipeline.sector import calculate_sector_price
 
 
 @dataclass
 class DailyRunResult:
+    """The lazy frames of one daily run. ``wide_export`` is built on
+    first access, because building it runs a Spark job."""
+
     prices: DataFrame          # state after incremental ingest
     sector_history: DataFrame  # (date, sector, calc_price) after refresh
-    wide_export: DataFrame     # reference-shaped wide CSV layout
+    tickers: list[str] | None = None  # wide-export ticker columns
+
+    @cached_property
+    def wide_export(self) -> DataFrame:
+        """Reference-shaped wide CSV layout: one column per ticker, then
+        one per sector. The sector ``pivot`` has no values list, so
+        building this frame runs a distinct-sectors job; ``tickers=None``
+        adds one more for the ticker columns."""
+        wide = pivot_wide(
+            self.prices.select("date", "ticker", F.col("close").alias("price")),
+            "date",
+            "ticker",
+            "price",
+            values=self.tickers,
+        )
+        return wide.join(
+            self.sector_history.filter(F.col("sector").isNotNull())
+            .groupBy("date")
+            .pivot("sector")
+            .agg(F.first("calc_price")),
+            "date",
+            "left",
+        )
 
 
 def run_daily_pipeline(
@@ -64,37 +96,17 @@ def run_daily_pipeline(
     # EP3: flagship computation over the refreshed state
     fresh = calculate_sector_price(prices, shares, shares_outstanding)
 
-    # UPDATE ... WHERE calc IS NULL → order-independent coalesce-merge.
-    # Only keys genuinely absent from state are appended (as NULL rows that
-    # the merge then fills) — an anti-join, NOT dropDuplicates over a union,
-    # which would keep an arbitrary row and could drop an already-computed
-    # state value in favor of fresh's recomputation.
-    new_keys = (
-        fresh.select("date", "sector")
-        .join(sector_history_state.select("date", "sector"), ["date", "sector"], "left_anti")
-        .withColumn("calc_price", F.lit(None).cast("double"))
+    # UPDATE ... WHERE calc IS NULL → one full outer join on the key: a
+    # state value wins, a NULL or absent one takes fresh's. No dedup
+    # picks a winner, so fresh's recomputation never clobbers a value
+    # already computed, whatever the partitioning.
+    history = (
+        sector_history_state.select("date", "sector", F.col("calc_price").alias("__state"))
+        .join(fresh.withColumnRenamed("calc_price", "__fresh"), ["date", "sector"], "full")
+        .select(
+            "date",
+            "sector",
+            F.coalesce("__state", "__fresh").cast("double").alias("calc_price"),
+        )
     )
-    history = coalesce_merge(
-        sector_history_state.unionByName(new_keys, allowMissingColumns=True),
-        fresh,
-        ["date", "sector"],
-        ["calc_price"],
-    )
-
-    # B3/B6 presentation edge: the reference's wide CSV shape
-    wide = pivot_wide(
-        prices.select("date", "ticker", F.col("close").alias("price")),
-        "date",
-        "ticker",
-        "price",
-        values=tickers,
-    )
-    export = wide.join(
-        history.filter(F.col("sector").isNotNull())
-        .groupBy("date")
-        .pivot("sector")
-        .agg(F.first("calc_price")),
-        "date",
-        "left",
-    )
-    return DailyRunResult(prices=prices, sector_history=history, wide_export=export)
+    return DailyRunResult(prices=prices, sector_history=history, tickers=tickers)

@@ -21,7 +21,8 @@ from stock_data_pipeline_spark.operators.windows import pct_vs_first
 
 def sector_price_levels(history: DataFrame) -> DataFrame:
     """(date, sector, calc_price) → wide (date, one column per sector) —
-    the levels chart input (sectors.py:134-165)."""
+    the levels chart input (sectors.py:134-165). The pivot has no values
+    list, so building this frame runs a Spark job to find the sectors."""
     return (
         history.groupBy("date")
         .pivot("sector")

@@ -1,9 +1,12 @@
 """End-to-end daily pipeline (EP1→EP3 restatement): ingest gating,
-idempotence, compute-only-missing refresh, wide export shape."""
+idempotence, compute-only-missing refresh, wide export shape, and a
+build that runs no Spark job and computes the sector aggregate once."""
 
 from __future__ import annotations
 
 import datetime as dt
+import re
+from decimal import Decimal
 
 from pyspark.sql import functions as F
 
@@ -65,10 +68,10 @@ def test_daily_run_end_to_end(spark):
 
 def test_refresh_fills_only_nulls_deterministically(spark):
     """The already-computed state value must survive regardless of
-    partitioning: the refresh appends only keys absent from state (anti
-    join), so there is no arbitrary-winner dedup that could let fresh's
-    recomputation clobber state. Regression for the dropDuplicates
-    nondeterminism (ADVICE r1)."""
+    partitioning: the refresh is a full outer join that coalesces state
+    before fresh, so there is no arbitrary-winner dedup that could let
+    fresh's recomputation clobber state. Regression for the
+    dropDuplicates nondeterminism (ADVICE r1)."""
     prices_state, incoming, shares, outstanding, history_state, market_days = _world(spark)
     # adversarial layouts: single partition, many partitions, key-skewed
     for n in (1, 7, 64):
@@ -96,3 +99,71 @@ def test_daily_run_is_idempotent(spark):
     h1 = {(r["date"], r["sector"]): r["calc_price"] for r in first.sector_history.collect()}
     h2 = {(r["date"], r["sector"]): r["calc_price"] for r in again.sector_history.collect()}
     assert h1 == h2
+
+
+def _history(spark, rows):
+    return spark.createDataFrame(rows, "date date, sector string, calc_price double")
+
+
+def test_refresh_fills_null_state_and_keeps_the_rest(spark):
+    """UPDATE-where-NULL on every kind of state row: a NULL that fresh
+    computes is filled, a NULL fresh cannot compute stays NULL, a state
+    key fresh never produces is kept as it is."""
+    prices_state, incoming, shares, outstanding, _, market_days = _world(spark)
+    d0 = dt.date(2026, 1, 2)
+    history_state = _history(
+        spark,
+        [
+            (D1, "xlk", 77.0),   # computed: kept over fresh's 16.0
+            (D2, "xlk", None),   # NULL, fresh computes 20.5: filled
+            (D2, "xlf", None),   # NULL, no fresh row: stays NULL
+            (d0, "xlk", 50.0),   # key absent from fresh: kept
+        ],
+    )
+    res = run_daily_pipeline(
+        prices_state, incoming, shares, outstanding, history_state, market_days
+    )
+    got = {(r["date"], r["sector"]): r["calc_price"] for r in res.sector_history.collect()}
+    assert got == {
+        (D1, "xlk"): 77.0,
+        (D2, "xlk"): 20.5,
+        (D2, "xlf"): None,
+        (d0, "xlk"): 50.0,
+    }
+
+
+def test_refresh_schema_is_canonical(spark):
+    # an empty state (the first run) and decimal prices still publish
+    # (date date, sector string, calc_price double)
+    _, _, shares, outstanding, _, market_days = _world(spark)
+    dec = "date date, ticker string, close decimal(10,2)"
+    prices_state = spark.createDataFrame(
+        [(D1, "aapl", Decimal("100.00")), (D1, "msft", Decimal("200.00"))], dec
+    )
+    incoming = spark.createDataFrame(
+        [(D2, "aapl", Decimal("110.00")), (D2, "msft", Decimal("190.00"))], dec
+    )
+    res = run_daily_pipeline(
+        prices_state, incoming, shares, outstanding, _history(spark, []), market_days
+    )
+    hist = res.sector_history
+    assert hist.schema.simpleString() == "struct<date:date,sector:string,calc_price:double>"
+    assert {r["date"]: r["calc_price"] for r in hist.collect()} == {D1: 20.0, D2: 20.5}
+
+
+def test_daily_run_builds_without_jobs_and_aggregates_once(spark):
+    """Building the run and reading the two frames a daily caller
+    persists launches no Spark job: the wide export, whose sector pivot
+    needs one, is built only on first access. The history plan holds
+    the (date, sector) aggregate once: the refresh joins fresh a single
+    time. Its only other aggregate is the ingest cutoff, a global max."""
+    world = _world(spark)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    res = run_daily_pipeline(*world, tickers=["aapl", "msft"])
+    _, history = res.prices, res.sector_history
+    assert set(tracker.getJobIdsForGroup(None)) == before
+    plan = history._jdf.queryExecution().optimizedPlan().toString()
+    aggregates = re.findall(r"Aggregate \[.*", plan)
+    assert len(aggregates) == 2, plan
+    assert sum("market_cap" in a for a in aggregates) == 1, plan

@@ -1,6 +1,6 @@
 """Operator semantics on literal frames: incremental append idempotence,
 PK enforcement, coalesce-merge fill-only-NULL, set diffs, pivot/unpivot
-round-trip, calendar densify."""
+round-trip, calendar densify and market-day gate."""
 
 from __future__ import annotations
 
@@ -13,6 +13,7 @@ from stock_data_pipeline_spark.operators import (
     coalesce_merge,
     densify_dates,
     enforce_primary_key,
+    market_day_filter,
     membership_diff,
     pivot_wide,
     unpivot_long,
@@ -101,6 +102,15 @@ def test_densify_dates_fills_gaps(spark):
     )
     out = [r[0] for r in densify_dates(df, "date").orderBy("date").collect()]
     assert out == [dt.date(2026, 1, d) for d in range(1, 6)]
+
+
+def test_market_day_filter_ignores_duplicate_calendar_dates(spark):
+    # the calendar is semi-joined as it comes, not deduplicated first
+    d1, d2 = dt.date(2026, 1, 5), dt.date(2026, 1, 6)
+    facts = _dates(spark, [(d1, "a"), (d1, "b"), (d2, "a")], ["date", "ticker"])
+    cal = _dates(spark, [(d1,), (d1,), (d1,)], ["day"])
+    out = market_day_filter(facts, cal, "date").collect()
+    assert sorted((r["date"], r["ticker"]) for r in out) == [(d1, "a"), (d1, "b")]
 
 
 def test_upsert_replaces_and_inserts(spark):

@@ -11,7 +11,7 @@ load hits both variants equally, so the per-round delta is signal.
 Usage: python tools/ab_measure.py <module:function> [rounds]
 where function(spark, sf_dir) -> dict[str, callable] mapping variant
 name -> zero-arg callable that builds-and-executes (noop sink) one
-variant. See tools/ab_q25.py for an example.
+variant. See tools/ab_q194_cogroup.py for an example.
 """
 
 from __future__ import annotations
