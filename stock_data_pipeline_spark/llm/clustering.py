@@ -294,7 +294,13 @@ def _assign_long(pts: DataFrame, cents: DataFrame, dim: int, m: int) -> DataFram
     size; the codebook crosses the boundary once per GROUP (k rows),
     never per corpus row. The exchange this adds over the pure-map
     shape is N·m narrow rows — orders of magnitude below the
-    interpreted-eval CPU it removes at any scale."""
+    interpreted-eval CPU it removes at any scale.
+
+    The output schema reuses the input column types (vec_id, s, qv
+    from ``pts``; cid from ``cents``), so an id column that is not a
+    long keeps its type."""
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
     spark = pts.sparkSession
     par = max(1, spark.sparkContext.defaultParallelism)
     n_salt = max(1, -(-2 * par // max(1, m)))
@@ -307,6 +313,11 @@ def _assign_long(pts: DataFrame, cents: DataFrame, dim: int, m: int) -> DataFram
     # ambiguity check stays happy (cogroup pairs keys positionally).
     salted_cents = cents.select(F.col("s").alias("cs"), "cid", "cv").withColumn(
         "__salt2", F.explode(F.array(*[F.lit(i).cast("int") for i in range(n_salt)]))
+    )
+
+    in_fields = [pts.schema["vec_id"], pts.schema["s"], pts.schema["qv"], cents.schema["cid"]]
+    out_schema = StructType(
+        [StructField(f.name, f.dataType) for f in in_fields] + [StructField("d2", DoubleType())]
     )
 
     def score(pts_pdf, cents_pdf):
@@ -355,7 +366,7 @@ def _assign_long(pts: DataFrame, cents: DataFrame, dim: int, m: int) -> DataFram
     return (
         salted_pts.groupBy("s", "__salt")
         .cogroup(salted_cents.groupBy("cs", "__salt2"))
-        .applyInPandas(score, "vec_id long, s int, qv array<long>, cid int, d2 double")
+        .applyInPandas(score, out_schema)
     )
 
 

@@ -760,25 +760,45 @@ def connected_components(
     # CollectMetrics fires), replacing the old per-round join-the-two-
     # checkpoints changed-count job: one job per round instead of two.
     # Equality of consecutive sums ⟺ no label changed ⟺ the old
-    # changed == 0 test, except round 1 (no previous sum), where an
-    # already-converged input costs one extra (idempotent) round —
-    # reachable only when every component is a singleton. A None sum
-    # (empty graph) converges immediately: empty in, empty out.
+    # changed == 0 test. The same observation carries Σ vertex and the
+    # row count, at no extra job:
+    # - every round outputs one row per vertex, so Σ vertex is the sum
+    #   of the INITIAL labels (lbl = vertex) and round 1 compares against
+    #   it — an input already at its fixpoint (all singletons, e.g.
+    #   self-loop-only edges) converges in round 1, so max_iter=1 works;
+    # - zero rows (empty graph) converges at once: empty in, empty out;
+    # - a null sum WITH rows (a decimal overflow under non-ANSI mode)
+    #   raises: read as "converged", it would return unconverged labels.
     prev_sum = None
     converged = False
     for i in range(max_iter):
         obs = Observation(f"cc_conv_{i}")
         new_labels = (
             _cc_round(bidir, labels)
-            .observe(obs, F.sum(F.col("lbl").cast("decimal(38,0)")).alias("s"))
+            .observe(
+                obs,
+                F.sum(F.col("lbl").cast("decimal(38,0)")).alias("s"),
+                F.sum(F.col("vertex").cast("decimal(38,0)")).alias("s0"),
+                F.count(F.lit(1)).alias("n"),
+            )
             .checkpoint(eager=True)
         )
-        cur_sum = obs.get["s"]
+        m = obs.get
         labels = new_labels
-        if cur_sum is None or (prev_sum is not None and cur_sum == prev_sum):
+        if m["n"] == 0:
             converged = True
             break
-        prev_sum = cur_sum
+        if m["s"] is None or m["s0"] is None:
+            raise RuntimeError(
+                f"connected_components: null label sum over {m['n']} vertices in "
+                f"round {i + 1} (decimal overflow?); convergence cannot be decided"
+            )
+        if prev_sum is None:
+            prev_sum = m["s0"]
+        if m["s"] == prev_sum:
+            converged = True
+            break
+        prev_sum = m["s"]
     if not converged:
         # NEVER return silently-wrong labels: an unconverged run split
         # components (found the hard way — the sf0.1 proximity graph

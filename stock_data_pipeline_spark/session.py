@@ -4,6 +4,37 @@ Local-mode defaults mirror what we'd set on a real cluster where it
 translates (AQE, adaptive coalescing/skew-join, Arrow transfers); the
 shuffle-partition count is sized to cores locally but on a 1000-executor
 cluster would be left to AQE's coalescing with a high initial value.
+
+Generated-code reuse. The engine's workloads run the same plans again
+and again (the daily job every market day, the LLM-dedup queries on
+every corpus snapshot), so Spark's whole-stage codegen cache must hit
+on a repeated plan. Two confs make it hit:
+
+- ``spark.sql.codegen.useIdInClassName=false`` (runtime, set by
+  :func:`ensure_engine_confs`): AQE numbers codegen stages as it plans
+  them, so the same pipeline is ``GeneratedIteratorForCodegenStage13``
+  on one run and ``...Stage18`` on the next. The class name is part of
+  the cache key (the generated source), so identical code missed the
+  cache. Without the id every class is ``GeneratedIterator``; the stage
+  id stays in the source's ``// codegenStageId=N`` comment.
+- ``spark.sql.codegen.cache.maxEntries`` (static, set by
+  :func:`get_session` only): the default 100-entry LRU is smaller than
+  one pass over the engine's working set, so each entry was evicted
+  before its plan came round again. See :data:`CODEGEN_CACHE_ENTRIES`.
+
+Measured on a 4-core VM (Janino compiles counted by
+``CodegenMetrics.METRIC_COMPILATION_TIME`` after a warm pass): a
+steady-state pass of perfbench's ``llm_dedup`` went from ~160 compiles
+to 0-2, ``daily_pipeline`` from 88 to 0, and a repeat of bench.py's 41
+headliners at sf0.001 from 914 to 2-4. The few left are new plans, not
+misses: AQE turns a shuffle join into a broadcast join when one side's
+stage happens to finish first, so a run can meet a variant no earlier
+run planned (q66's connected-components rounds do). Over 10
+interleaved perfbench pairs on that VM, CPU per pass (JVM plus Python
+workers) fell 29% on ``llm_dedup`` (23.5 to 16.7 s) and 16% on
+``daily_pipeline`` (17.4 to 14.7 s): compiling, loading and JIT-ing the
+recompiled classes is work no task's CPU time shows. Peak RSS did not
+move, so the larger cache costs no measurable memory.
 """
 
 from __future__ import annotations
@@ -11,6 +42,14 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Whole-stage codegen cache size (static conf; Spark's default is 100).
+# An entry is one generated body per class loader: in local mode the
+# driver thread and the executor tasks each compile it once. Measured
+# working set: one run of bench.py's 41 headliners at sf0.001 fills 736
+# entries once class names carry no stage id, so 1000 holds every
+# repeated plan of one session with headroom.
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def get_session(
@@ -25,6 +64,11 @@ def get_session(
     ``extra_confs``: creation-time confs that cannot be set at runtime
     (e.g. ``spark.ui.retainedStages`` for the bench's CPU-time
     accounting) — ignored if a session already exists in-process.
+
+    Sizes the codegen cache to :data:`CODEGEN_CACHE_ENTRIES` (a static
+    conf, so only sessions built here get it; see the module docstring).
+    Call :func:`ensure_engine_confs` on the result for the runtime confs,
+    including stable codegen class names.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -52,6 +96,7 @@ def get_session(
         .config("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
     )
@@ -75,8 +120,15 @@ def ensure_engine_confs(spark: SparkSession) -> SparkSession:
       factory's comment) is runtime-settable and must hold on DRIVER
       sessions too — the q90-shape distribution-reuse trap does not
       care who built the session.
+    - ``useIdInClassName=false``: generated classes are named without
+      the AQE stage id, so a repeated plan hits Spark's codegen cache
+      instead of recompiling (see the module docstring). Runtime, so a
+      driver-provided session gets it; the cache SIZE is static, and a
+      driver session keeps its own (Spark's default is 100 entries), so
+      there only plans inside that LRU window reuse their code.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
+    spark.conf.set("spark.sql.codegen.useIdInClassName", "false")
     return spark

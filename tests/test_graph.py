@@ -108,3 +108,42 @@ def test_cc_converges_on_long_path_with_scrambled_ids(spark):
     assert len(labels) == n + 1
     want = min(ids)
     assert {r["cluster_id"] for r in labels} == {want}
+
+
+def test_cc_max_iter_1_returns_input_already_at_fixpoint(spark):
+    """Self-loop-only edges are already converged (every vertex is its
+    own component). Round 1 compares its label sum with the initial
+    labels' sum (observed as Σ vertex on the same job), so one round
+    proves convergence and max_iter=1 returns instead of raising."""
+    from stock_data_pipeline_spark.llm.dedup import connected_components
+
+    edges = spark.createDataFrame([(1, 1), (5, 5), (9, 9)], "id_a long, id_b long")
+    out = {r["vertex"]: r["cluster_id"] for r in connected_components(edges, max_iter=1).collect()}
+    assert out == {1: 1, 5: 5, 9: 9}
+
+
+def test_cc_empty_graph_converges_at_once(spark):
+    """Zero rows observed: empty in, empty out, within one round."""
+    from stock_data_pipeline_spark.llm.dedup import connected_components
+
+    edges = spark.createDataFrame([], "id_a long, id_b long")
+    assert connected_components(edges, max_iter=1).collect() == []
+
+
+def test_cc_null_label_sum_with_rows_raises(spark):
+    """A null Σ lbl over a non-empty label table (here: ids whose
+    decimal cast is null under non-ANSI mode, the same null an overflowing
+    decimal sum gives) must raise, not read as "converged" and return
+    labels nobody checked."""
+    import pytest
+
+    from stock_data_pipeline_spark.llm.dedup import connected_components
+
+    edges = spark.createDataFrame([("a", "b"), ("b", "c")], "id_a string, id_b string")
+    saved = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        with pytest.raises(RuntimeError, match="null label sum"):
+            connected_components(edges).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", saved)

@@ -595,3 +595,27 @@ def test_png_decoder_rejects_interlace_and_bombs():
     # the lying payload (declared 1x1, stream holds 50 MB) as invalid
     # rather than decode its first scanline as if the file were fine
     assert decode_png_raster(bomb) is None
+
+
+@pytest.mark.parametrize("id_type", ["int", "bigint"])
+def test_pq_assignment_keeps_input_id_type(spark, id_type):
+    """The PQ codeword assignment's cogroup output schema comes from its
+    inputs: an int vec_id stays int rather than being upcast to long,
+    and the nearest codeword (ties to the lower cid) is unchanged."""
+    from stock_data_pipeline_spark.llm.clustering import _assign_long
+
+    pts = spark.createDataFrame(
+        [(1, 0, [0, 0]), (2, 0, [10, 10]), (3, 1, [5, 5])],
+        f"vec_id {id_type}, s int, qv array<long>",
+    )
+    cents = spark.createDataFrame(
+        [(0, 0, [0.0, 0.0]), (0, 1, [9.0, 9.0]), (1, 0, [5.0, 5.0]), (1, 1, [5.0, 5.0])],
+        "s int, cid int, cv array<double>",
+    )
+    out = _assign_long(pts, cents, dim=4, m=2)
+    assert out.schema["vec_id"].dataType.simpleString() == id_type
+    assert [f.dataType.simpleString() for f in out.schema.fields[1:]] == [
+        "int", "array<bigint>", "int", "double"
+    ]
+    rows = sorted((r.vec_id, r.s, r.cid, r.d2) for r in out.collect())
+    assert rows == [(1, 0, 0, 0.0), (2, 0, 1, 2.0), (3, 1, 0, 0.0)]

@@ -274,6 +274,9 @@ def test_stateful_checkpoint_recovery(spark, tmp_path):
     input. This is the day-one 100-TB streaming property: a stateful
     job that cannot resume its state store is a batch job with extra
     steps."""
+    import os
+    import time
+
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -282,6 +285,11 @@ def test_stateful_checkpoint_recovery(spark, tmp_path):
     in_dir = tmp_path / "in"
     in_dir.mkdir()
     ckpt = str(tmp_path / "ckpt")
+
+    # The file source takes files oldest first by millisecond mtime, and
+    # back-to-back writes often share one, which leaves their order to
+    # the directory listing. Stamp each file one second after the last.
+    stamp = [time.time_ns() - 10**10]
 
     def put(name: str, rows: list[tuple[int, float]]) -> None:
         pq.write_table(
@@ -293,6 +301,8 @@ def test_stateful_checkpoint_recovery(spark, tmp_path):
             ),
             in_dir / name,
         )
+        stamp[0] += 10**9
+        os.utime(in_dir / name, ns=(stamp[0], stamp[0]))
 
     def run(query_name: str) -> list:
         # foreachBatch, not the memory sink: memory does not support
