@@ -35,6 +35,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+from perfbench.tracing import PYTHON_EVAL  # noqa: E402
 from stock_data_pipeline_spark import queries as _q  # noqa: E402
 from stock_data_pipeline_spark.session import ensure_engine_confs, get_session  # noqa: E402
 
@@ -284,9 +285,7 @@ def _plan_fingerprint(spark, name, fn, df, sf_dir) -> dict[str, int]:
         "shuffle_exchanges": count("Exchange"),
         "broadcast_exchanges": count("BroadcastExchange"),
         "wholestage_codegen": count("WholeStageCodegen"),
-        "python_eval": count(
-            "FlatMapGroupsInPandas", "MapInPandas", "ArrowEvalPython", "BatchEvalPython"
-        ),
+        "python_eval": sum(1 for n in names if n in PYTHON_EVAL),
         "parquet_scans": count("Scan parquet"),
         "in_memory_scans": count("InMemoryTableScan"),
         "sort_merge_joins": count("SortMergeJoin"),

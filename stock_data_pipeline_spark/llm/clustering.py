@@ -1,25 +1,35 @@
-"""Document/embedding clustering — fixed-round Lloyd k-means.
+"""Document/embedding clustering — fixed-round Lloyd k-means, product
+quantization and IVF-PQ.
 
 Reference scope: the reference pipeline has no clustering; this is part
 of the training-data extension set (corpus organization / diversity
-sampling before mixture construction), built the way iterative ML fits
-Spark: each Lloyd round is a broadcast-join assignment plus one
-posexplode aggregation, all declarative, no driver-side data movement.
+sampling before mixture construction, and the ANN indexes over it).
+
+One Lloyd implementation serves every caller. Points live in a LONG
+table (vec_id, s, qv): one row per vector and subspace, qv the quantized
+slice. Product quantization splits each vector into m subspaces; plain
+k-means (:func:`kmeans_fixed`) and the IVF coarse quantizer are the m=1
+case, where qv is the whole quantized vector (:func:`_full_long`). Each
+round is a salted cogroup of point slices with their subspace's k-row
+codebook, scored in numpy (:func:`_assign_long`), plus an exact-integer
+centroid recompute (:func:`_recompute_long`); all m codebooks train in
+one plan.
 
 Determinism & verifiability: embeddings are quantized to integers
 (``floor(x · 2^quant_bits)`` — exact: float32→double is exact and the
 multiplier is a power of two), so per-cluster per-dimension sums are
 exact int64 arithmetic (order-independent), centroid means are ONE
-double division of identical operands, and distance² folds run
-left-to-right from a 0.0 seed — every round reproduces bit-identically
-in any ANSI-SQL engine (see q80's generated oracle).
+double division of identical operands, distance² accumulates
+left-to-right over dimensions from a 0.0 seed, and ties go to the
+lower centroid id — every round reproduces bit-identically in any
+ANSI-SQL engine (see q80's and q194's generated oracles).
 
-Scale design: centroids are k rows — always broadcast; the assignment
-is a broadcast nested-loop over k (no shuffle of the corpus); the
-recompute shuffles (cluster, dim, int64) triples with map-side partial
-aggregation. Rounds are unrolled lazily (no actions, no checkpoints —
-``rounds`` is small by design; for to-convergence clustering reuse the
-``connected_components`` checkpoint pattern)."""
+Scale design: codebooks are m·k rows — parameter-sized at any corpus
+scale. Assignment shuffles N·m narrow point rows into salted groups;
+the recompute shuffles (s, cluster, dim, int64) partial sums with
+map-side aggregation. Rounds are unrolled lazily (no actions, no
+checkpoints — ``rounds`` is small by design; for to-convergence
+clustering reuse the ``connected_components`` checkpoint pattern)."""
 
 from __future__ import annotations
 
@@ -65,136 +75,8 @@ def _sq_dist_unrolled(qv, cv, dim: int):
     return acc
 
 
-def _assign(pts: DataFrame, cents: DataFrame) -> DataFrame:
-    """Nearest centroid per point; ties broken by centroid id. The
-    centroid table is k rows — broadcast, so the corpus never shuffles
-    during assignment."""
-    scored = pts.crossJoin(F.broadcast(cents)).withColumn(
-        "dist2", _sq_dist(F.col("qv"), F.col("cv"))
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("dist2").asc(), F.col("cid").asc())
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("vec_id", "qv", "cid", "dist2")
-    )
-
-
-def _recompute(assigned: DataFrame) -> DataFrame:
-    """New centroids: exact int64 per-dimension sums (posexplode →
-    map-side-combined hash aggregate), then one double division per
-    dimension. Empty clusters drop out (same as the SQL oracle)."""
-    ex = assigned.select("cid", F.posexplode("qv").alias("dim", "x"))
-    sums = ex.groupBy("cid", "dim").agg(F.sum("x").alias("s"))
-    cnt = assigned.groupBy("cid").agg(F.count("*").alias("n"))
-    return (
-        sums.groupBy("cid")
-        .agg(F.sort_array(F.collect_list(F.struct("dim", "s"))).alias("ds"))
-        .join(F.broadcast(cnt), "cid")  # k rows — never sort-merge this
-        .select(
-            "cid",
-            F.transform("ds", lambda t: t["s"].cast("double") / F.col("n")).alias("cv"),
-        )
-    )
-
-
-def kmeans_fixed(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 8,
-    rounds: int = 2,
-    quant_bits: int = 10,
-) -> DataFrame:
-    """``rounds`` unrolled Lloyd iterations over quantized embeddings;
-    init = the ``k`` lowest-id vectors (deterministic, no RNG state).
-    Returns (vec_id, cluster_id, dist2) — the final assignment and its
-    squared distance to the pre-update centroid."""
-    pts = df.select(
-        F.col(id_col).alias("vec_id"), _quantize(F.col(vec_col), quant_bits).alias("qv")
-    )
-    # init: k lowest-id vectors via orderBy().limit() (per-partition
-    # heaps — NOT a global single-partition window over the corpus);
-    # the ranking window then runs over only k rows
-    w = Window.orderBy("vec_id")
-    cents = (
-        pts.orderBy("vec_id")
-        .limit(k)
-        .withColumn("__rn", F.row_number().over(w))
-        .select(
-            (F.col("__rn") - 1).cast("int").alias("cid"),
-            F.transform("qv", lambda x: x.cast("double")).alias("cv"),
-        )
-    )
-    assigned = None
-    for _ in range(rounds):
-        assigned = _assign(pts, cents)
-        cents = _recompute(assigned)
-    return assigned.select(
-        "vec_id", F.col("cid").cast("int").alias("cluster_id"), "dist2"
-    )
-
-
-def _lloyd_rounds(
-    pts: DataFrame, k: int, rounds: int, train: DataFrame | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """``rounds`` unrolled Lloyd iterations over (vec_id, qv) points;
-    init = the k lowest-id vectors. Returns ``(assigned, cents_used)``
-    where ``cents_used`` is the centroid table the FINAL assignment
-    scored against (what ADC distance tables must use). Same lazy
-    unrolled-plan shape as :func:`kmeans_fixed`.
-
-    ``train``: optional training subset (e.g. a cached deterministic
-    sample). When given, the init and the ``rounds - 1`` centroid
-    updates iterate over it ONLY — the full ``pts`` is touched exactly
-    once, by the final assignment. This is how codebooks are trained at
-    scale: Lloyd never needs the whole corpus, and re-reading 100 TB
-    per round to refine k·m centroids is pure waste. With
-    ``train=None`` the plan is identical to the historical full-data
-    unroll."""
-    t = train if train is not None else pts
-    w = Window.orderBy("vec_id")
-    cents = (
-        t.orderBy("vec_id")
-        .limit(k)
-        .withColumn("__rn", F.row_number().over(w))
-        .select(
-            (F.col("__rn") - 1).cast("int").alias("cid"),
-            F.transform("qv", lambda x: x.cast("double")).alias("cv"),
-        )
-    )
-    for _ in range(rounds - 1):
-        cents = _recompute(_assign(t, cents))
-    # the final codebook is k rows (parameter-sized) with >=2 consumers
-    # in every caller (the final assignment + the query-side distance
-    # tables/probes) — cache it so the Lloyd chain executes once, not
-    # once per consumer (same keyed-by-plan discipline and bound
-    # rationale as _train_sample)
-    cents = cents.cache()
-    return _assign(pts, cents), cents
-
-
-def _train_sample(pts: DataFrame, train_mod: int | None) -> DataFrame | None:
-    """Deterministic 1-in-``train_mod`` systematic training sample
-    (``vec_id % train_mod == 0`` — portable to the SQL oracle, unlike an
-    engine-specific hash), CACHED: the unrolled Lloyd rounds reference
-    their input once per round, and caching the small sample turns those
-    re-reads into in-memory scans instead of repeated source scans. At
-    corpus scale this is the difference between one 100 TB pass (the
-    final assignment) and ``rounds + 1`` of them. The cache entry is
-    keyed by canonicalized plan, so repeated invocations reuse it
-    rather than stacking duplicates; entries live until the session
-    ends (the returned plan stays lazy, so there is no safe unpersist
-    point inside the operator) — bounded at |table|/train_mod ×
-    (sub_dim + 1) int64s per distinct (table, subspace) — ~40 KB per
-    entry at sf0.1."""
-    if train_mod is None:
-        return None
-    return pts.filter(F.col("vec_id") % train_mod == 0).cache()
-
-
 # ---------------------------------------------------------------------------
-# Subspace-keyed PQ core (r09). The r08 shape ran ONE Lloyd plan chain
+# Subspace-keyed Lloyd core (r09). The r08 shape ran ONE Lloyd plan chain
 # PER subspace — fine at m=4/k=16, but the r09 budget re-size (q194 to
 # m=16/k=256, the smallest config whose recall carries signal on the
 # uniform-random fixture — RECALL_r08) made two costs structural:
@@ -204,15 +86,22 @@ def _train_sample(pts: DataFrame, train_mod: int | None) -> DataFrame | None:
 #     WINDOW, shuffling N·k rows per subspace — traffic that grows with
 #     the codebook size k.
 # The core below keys everything by the subspace id instead: one
-# (vec_id, s, qv) table, one broadcast (s, cid, cv) codebook of m·k
-# rows (parameter-sized — broadcastable at ANY corpus scale), and the
-# nearest-centroid pick is a min(struct(d2, cid)) HASH AGGREGATE — the
-# map side collapses each (s, vec_id) group to one row before the
-# exchange, so assignment shuffles N·m rows regardless of k. Same
-# arithmetic, same init, same tie-breaks; every consumer is value-
-# oracled (q193/q194/q198), which is what makes a rewrite like this
-# cheap to trust.
+# (vec_id, s, qv) table and one (s, cid, cv) codebook of m·k rows
+# (parameter-sized at ANY corpus scale); full-vector k-means is its m=1
+# case. Same arithmetic, same init, same tie-breaks; every consumer is
+# value-oracled (q80/q193/q194/q198), which is what makes a rewrite like
+# this cheap to trust.
 # ---------------------------------------------------------------------------
+
+
+def _full_long(df: DataFrame, id_col: str, vec_col: str, quant_bits: int) -> DataFrame:
+    """(vec_id, s=0, qv): the m=1 long table — the whole quantized
+    vector as the single subspace, built with one plain select."""
+    return df.select(
+        F.col(id_col).alias("vec_id"),
+        F.lit(0).cast("int").alias("s"),
+        _quantize(F.col(vec_col), quant_bits).alias("qv"),
+    )
 
 
 def _subspace_long(
@@ -251,14 +140,24 @@ def _subspace_long(
 
 def _train_long(pts: DataFrame, train_mod: int | None) -> DataFrame | None:
     """Deterministic 1-in-``train_mod`` systematic training sample of
-    the long table (same discipline + cache rationale as
-    :func:`_train_sample`, one cached table instead of m)."""
+    the long table (``vec_id % train_mod == 0`` — portable to the SQL
+    oracle, unlike an engine-specific hash), CACHED: the unrolled Lloyd
+    rounds reference their input once per round, and caching the small
+    sample turns those re-reads into in-memory scans instead of repeated
+    source scans. At corpus scale this is the difference between one
+    100 TB pass (the final assignment) and ``rounds + 1`` of them. The
+    cache entry is keyed by canonicalized plan, so repeated invocations
+    reuse it rather than stacking duplicates; entries live until the
+    session ends (the returned plan stays lazy, so there is no safe
+    unpersist point inside the operator) — bounded at
+    |table|/train_mod × m × (sub_dim + 2) values per distinct (table,
+    config)."""
     if train_mod is None:
         return None
     return pts.filter(F.col("vec_id") % train_mod == 0).cache()
 
 
-def _assign_long(pts: DataFrame, cents: DataFrame, dim: int, m: int) -> DataFrame:
+def _assign_long(pts: DataFrame, cents: DataFrame, m: int) -> DataFrame:
     """Nearest centroid per (vec_id, s); ties break on centroid id.
 
     r10 shape — a salted COGROUP into vectorized numpy (guide §4.2).
@@ -279,13 +178,15 @@ def _assign_long(pts: DataFrame, cents: DataFrame, dim: int, m: int) -> DataFram
       numpy: the same N·m·k FLOPs vectorize at memory bandwidth
       (interleaved A/B: q194 CPU −46%, median 12.1 vs 22.3 CPU-s).
 
-    Bit-identity with both JVM predecessors (oracle-pinned): numpy
+    Bit-identity with the JVM predecessors (oracle-pinned): numpy
     float64 +,−,* are the same IEEE binary64 ops the JVM runs; the
     accumulation is an explicit sequential loop over dims — exactly
     the 0.0-seeded left fold — and argmin returns the FIRST minimal
     position, which on a cid-sorted codebook IS the (d2 ASC, cid ASC)
-    struct-min tie-break. Verified exceptAll 0/0 both directions on
-    q193/q194/q198/q396 at sf0.001+sf0.01.
+    tie-break. Verified exceptAll 0/0 both directions on
+    q193/q194/q198/q396 at sf0.001+sf0.01, and for the m=1 case against
+    the retired full-vector crossJoin + window assignment (kmeans_fixed
+    and q198's coarse quantizer) at sf0.01+sf0.1.
 
     Scale guards: the salt (deterministic pmod(xxhash64(vec_id)) —
     guide §2.5, never rand()) sizes groups to ~2·defaultParallelism
@@ -298,7 +199,9 @@ def _assign_long(pts: DataFrame, cents: DataFrame, dim: int, m: int) -> DataFram
 
     The output schema reuses the input column types (vec_id, s, qv
     from ``pts``; cid from ``cents``), so an id column that is not a
-    long keeps its type."""
+    long keeps its type. A null vector on either side raises a
+    ``ValueError`` naming it: there is no nearest centroid to a null
+    vector, and no distance from a null centroid."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     spark = pts.sparkSession
@@ -334,6 +237,13 @@ def _assign_long(pts: DataFrame, cents: DataFrame, dim: int, m: int) -> DataFram
                     "d2": pd.Series(dtype="float64"),
                 }
             )
+        for pdf, key, col in ((pts_pdf, "vec_id", "qv"), (cents_pdf, "cid", "cv")):
+            nulls = pdf[col].isna()
+            if nulls.any():
+                raise ValueError(
+                    f"k-means assignment: null vector at {key}="
+                    f"{pdf[key][nulls].iloc[0]} (subspace {pts_pdf['s'].iloc[0]})"
+                )
         cents_pdf = cents_pdf.sort_values("cid")
         cmat = np.stack(cents_pdf["cv"].to_numpy())  # (k, dim) float64
         cids = cents_pdf["cid"].to_numpy()
@@ -372,8 +282,9 @@ def _assign_long(pts: DataFrame, cents: DataFrame, dim: int, m: int) -> DataFram
 
 def _recompute_long(assigned: DataFrame) -> DataFrame:
     """New (s, cid, cv) codebook: exact int64 per-dimension sums, one
-    double division per dimension — :func:`_recompute` keyed by
-    subspace. Empty clusters drop out (same as the SQL oracle)."""
+    double division per dimension (posexplode → map-side-combined hash
+    aggregate), keyed by subspace. Empty clusters drop out (same as the
+    SQL oracle)."""
     ex = assigned.select("s", "cid", F.posexplode("qv").alias("dim", "x"))
     sums = ex.groupBy("s", "cid", "dim").agg(F.sum("x").alias("sm"))
     cnt = assigned.groupBy("s", "cid").agg(F.count("*").alias("n"))
@@ -393,7 +304,6 @@ def _lloyd_rounds_long(
     pts: DataFrame,
     k: int,
     rounds: int,
-    dim: int,
     m: int,
     train: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
@@ -402,7 +312,17 @@ def _lloyd_rounds_long(
     the training set (the SAME id set in every subspace — exactly the
     per-subspace init, since every subspace holds the same vec_ids);
     the id rank runs over k rows after a distributed orderBy/limit.
-    Returns ``(assigned, cents_used)`` like :func:`_lloyd_rounds`."""
+    Returns ``(assigned, cents_used)``: ``assigned`` is (vec_id, s, qv,
+    cid, d2), ``cents_used`` is the (s, cid, cv) codebook the FINAL
+    assignment scored against (what ADC distance tables and IVF probes
+    must use).
+
+    ``train``: optional training subset (:func:`_train_long`). When
+    given, the init and the ``rounds - 1`` centroid updates iterate over
+    it ONLY — the full ``pts`` is touched exactly once, by the final
+    assignment. This is how codebooks are trained at scale: Lloyd never
+    needs the whole corpus, and re-reading 100 TB per round to refine
+    m·k centroids is pure waste."""
     t = train if train is not None else pts
     w = Window.orderBy("vec_id")
     ids = (
@@ -413,13 +333,35 @@ def _lloyd_rounds_long(
         "s", "cid", F.transform("qv", lambda x: x.cast("double")).alias("cv")
     )
     for _ in range(rounds - 1):
-        cents = _recompute_long(_assign_long(t, cents, dim, m))
+        cents = _recompute_long(_assign_long(t, cents, m))
     # m·k rows — parameter-sized; cached so the unrolled Lloyd chain
     # runs once even though both the final assignment and the query
-    # LUT consume it (see _lloyd_rounds / _train_sample for the cache
-    # discipline; ~m·k·sub_dim doubles resident per distinct config)
+    # LUT / coarse probe consume it (same keyed-by-plan discipline as
+    # _train_long; ~m·k·sub_dim doubles resident per distinct config)
     cents = cents.cache()
-    return _assign_long(pts, cents, dim, m), cents
+    return _assign_long(pts, cents, m), cents
+
+
+def kmeans_fixed(
+    df: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    k: int = 8,
+    rounds: int = 2,
+    quant_bits: int = 10,
+) -> DataFrame:
+    """``rounds`` unrolled Lloyd iterations over quantized embeddings —
+    the m=1 case of the subspace-long core; init = the ``k`` lowest-id
+    vectors (deterministic, no RNG state). Returns (vec_id, cluster_id,
+    dist2): the final assignment and its squared distance to the
+    centroids it was scored against (those of round ``rounds - 1``).
+    Ties go to the lower cluster id; a null embedding raises."""
+    assigned, _ = _lloyd_rounds_long(
+        _full_long(df, id_col, vec_col, quant_bits), k, rounds, 1
+    )
+    return assigned.select(
+        "vec_id", F.col("cid").cast("int").alias("cluster_id"), F.col("d2").alias("dist2")
+    )
 
 
 def _codes_wide(assigned: DataFrame, query_mod: int | None = None) -> DataFrame:
@@ -517,11 +459,9 @@ def pq_codes(
     each vector's code word per subspace plus the total quantization
     error Σ_s ‖x_s − c_{s,code_s}‖².
 
-    Scale design: every subspace's codebook is k rows (broadcast); the
-    corpus is scanned once per subspace with NO shuffle during
-    assignment, and the only exchanges are the k·m-row centroid
-    recomputes. The join of the m per-subspace assignments is on vec_id
-    — co-partitioned after the first exchange. The m·k·sub_dim-float
+    Scale design: all m codebooks train in one plan over the
+    subspace-long table (see the core above), and one vec_id-keyed
+    aggregate gathers each vector's m codes. The m·k·sub_dim-float
     codebook replaces the full vector for downstream search: 64 dims of
     float32 compress to m=4 bytes per vector, the standard memory
     layout for billion-scale ANN.
@@ -532,7 +472,7 @@ def pq_codes(
     in explicit subspace order (sort_array + left fold)."""
     pts = _subspace_long(df, id_col, vec_col, m, sub_dim, quant_bits)
     assigned, _ = _lloyd_rounds_long(
-        pts, k, rounds, sub_dim, m, train=_train_long(pts, train_mod)
+        pts, k, rounds, m, train=_train_long(pts, train_mod)
     )
     a = assigned.groupBy("vec_id").agg(
         F.sort_array(F.collect_list(F.struct("s", "cid", "d2"))).alias("a")
@@ -631,7 +571,7 @@ def pq_adc_topk(
         )
     pts = _subspace_long(df, id_col, vec_col, m, sub_dim, quant_bits)
     assigned, cents = _lloyd_rounds_long(
-        pts, k, rounds, sub_dim, m, train=_train_long(pts, train_mod)
+        pts, k, rounds, m, train=_train_long(pts, train_mod)
     )
     codes = _codes_wide(assigned, query_mod)
     lut = _query_lut(pts, cents, query_mod, k)
@@ -661,8 +601,8 @@ def ivf_pq_topk(
     + PQ asymmetric-distance scoring (IVF-PQ, Jégou et al. 2011 §V).
 
     1. A coarse quantizer (Lloyd over the FULL vector, ``n_lists``
-       centroids) partitions the corpus into inverted lists — the same
-       broadcast-assignment shape as q53's IVF.
+       centroids — the m=1 case of the PQ core) partitions the corpus
+       into inverted lists.
     2. Each query probes its ``nprobe`` nearest coarse lists only; the
        candidate set is an equi-join on list id, so scoring work drops
        by ~n_lists/nprobe before any distance math happens.
@@ -671,9 +611,9 @@ def ivf_pq_topk(
        only by its byte codes.
 
     Scale shape: the corpus is scanned once for coarse assignment and
-    once per subspace for codes (all broadcast joins, no shuffle of the
-    corpus); the only |candidates|-proportional work is the final
-    list-id equi-join + code lookups. At 10⁹ vectors with n_lists=2¹⁶
+    once for codes (each a salted cogroup of narrow point rows); the
+    only |candidates|-proportional work is the final list-id equi-join
+    + code lookups. At 10⁹ vectors with n_lists=2¹⁶
     and nprobe=32, ADC touches ~0.05% of the corpus per query.
 
     Determinism: both quantizers use the exact-integer Lloyd rounds
@@ -747,11 +687,9 @@ def _ivf_pq_stages(
       coarse lists (ties on (distance, cid)).
     - ``lut``: (query_id, lut) — the per-query m×k ADC distance map.
     """
-    pts_full = df.select(
-        F.col(id_col).alias("vec_id"), _quantize(F.col(vec_col), quant_bits).alias("qv")
-    )
-    coarse_assigned, coarse_cents = _lloyd_rounds(
-        pts_full, n_lists, rounds, train=_train_sample(pts_full, train_mod)
+    pts_full = _full_long(df, id_col, vec_col, quant_bits)
+    coarse_assigned, coarse_cents = _lloyd_rounds_long(
+        pts_full, n_lists, rounds, 1, train=_train_long(pts_full, train_mod)
     )
     corpus_lists = coarse_assigned.filter(F.col("vec_id") % query_mod != 0).select(
         "vec_id", F.col("cid").alias("list_id")
@@ -761,7 +699,7 @@ def _ivf_pq_stages(
     )
     wp = Window.partitionBy("query_id").orderBy(F.col("cd2").asc(), F.col("cid").asc())
     probed = (
-        queries_full.crossJoin(F.broadcast(coarse_cents))
+        queries_full.crossJoin(F.broadcast(coarse_cents.select("cid", "cv")))
         .withColumn("cd2", _sq_dist(F.col("qv"), F.col("cv")))
         .withColumn("__pn", F.row_number().over(wp))
         .filter(F.col("__pn") <= nprobe)
@@ -769,7 +707,7 @@ def _ivf_pq_stages(
     )
     pts = _subspace_long(df, id_col, vec_col, m, sub_dim, quant_bits)
     assigned, cents = _lloyd_rounds_long(
-        pts, k, rounds, sub_dim, m, train=_train_long(pts, train_mod)
+        pts, k, rounds, m, train=_train_long(pts, train_mod)
     )
     corpus_side = corpus_lists.join(_codes_wide(assigned, query_mod), "vec_id")
     lut = _query_lut(pts, cents, query_mod, k)

@@ -3,10 +3,11 @@
 The reference has no graph operators; this is the extension family for
 link-style analyses over pipeline-derived graphs (event-transition
 graphs, dup-pair graphs from llm.dedup, citation/url graphs at corpus
-scale). Same execution philosophy as llm.clustering.kmeans_fixed: a
-FIXED number of rounds unrolled into one lazy Catalyst plan — no
-driver-side loop state, no actions during plan construction, resumable
-and oracle-reproducible because every round is pure DataFrame algebra.
+scale). Same execution philosophy as the Lloyd rounds in llm.clustering
+(``_lloyd_rounds_long``): a FIXED number of rounds unrolled into one
+lazy Catalyst plan — no driver-side loop state, no actions during plan
+construction, resumable and oracle-reproducible because every PageRank
+round is pure DataFrame algebra.
 
 Determinism discipline (what makes a full value oracle possible):
 - edge weights and out-degrees are exact integers;

@@ -1821,10 +1821,10 @@ def _pq_subspace_blocks(
     or ``tag`` when given — the coarse IVF quantizer reuses this with
     tag='cg' over the full vector) — the q80 generated-oracle pattern
     applied to a contiguous slice of the embedding. Mirrors
-    clustering._lloyd_rounds exactly: same init (k lowest vec_ids),
+    clustering._lloyd_rounds_long exactly: same init (k lowest vec_ids),
     same quantization, same fold order. With ``train_mod``, the init
     and the centroid updates run over the deterministic 1-in-mod
-    systematic sample only (mirroring clustering._train_sample); the
+    systematic sample only (mirroring clustering._train_long); the
     full corpus is assigned once, against the final centroids."""
     scale = 1 << bits
     a, b = s * sub_dim + 1, (s + 1) * sub_dim

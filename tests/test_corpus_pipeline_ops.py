@@ -163,6 +163,28 @@ def test_kmeans_assignment_is_locally_optimal(spark):
     assert got == a2, "Spark assignment diverges from the reference Lloyd loop"
 
 
+def test_kmeans_ties_go_to_lower_cid_and_null_vector_raises(spark):
+    """One round scores against the init centroids (vec_ids 0 and 1):
+    vec_id 2 sits exactly halfway between them and goes to cid 0. A
+    null embedding has no nearest centroid and must raise, not land in
+    some cluster with a null distance."""
+    from stock_data_pipeline_spark.llm.clustering import kmeans_fixed
+
+    schema = "vec_id bigint, embedding array<float>"
+    emb = spark.createDataFrame(
+        [(0, [2.0, 0.0]), (1, [0.0, 0.0]), (2, [1.0, 0.0])], schema
+    )
+    got = {
+        r["vec_id"]: (r["cluster_id"], r["dist2"])
+        for r in kmeans_fixed(emb, k=2, rounds=1).collect()
+    }
+    assert got == {0: (0, 0.0), 1: (1, 0.0), 2: (0, 1024.0 * 1024.0)}
+
+    with_null = emb.unionByName(spark.createDataFrame([(3, None)], schema))
+    with pytest.raises(Exception, match=r"null vector at vec_id=3"):
+        kmeans_fixed(with_null, k=2, rounds=1).collect()
+
+
 def test_domain_mixing_rebalances(rows, spark):
     orig = {
         r["lang"]: r["c"]

@@ -612,7 +612,7 @@ def test_pq_assignment_keeps_input_id_type(spark, id_type):
         [(0, 0, [0.0, 0.0]), (0, 1, [9.0, 9.0]), (1, 0, [5.0, 5.0]), (1, 1, [5.0, 5.0])],
         "s int, cid int, cv array<double>",
     )
-    out = _assign_long(pts, cents, dim=4, m=2)
+    out = _assign_long(pts, cents, m=2)
     assert out.schema["vec_id"].dataType.simpleString() == id_type
     assert [f.dataType.simpleString() for f in out.schema.fields[1:]] == [
         "int", "array<bigint>", "int", "double"

@@ -29,7 +29,9 @@ SMOKE = [
     "q54_minhash_lsh_verified",
     "q66_dup_clusters",
     "q53_ann_ivf_topk",
+    "q80_kmeans",
     "q194_pq_adc_topk",
+    "q198_ivf_pq_topk",
     "q186_kmv_distinct",
     "q245_ks_test",
     "q305_heavy_hitters",
